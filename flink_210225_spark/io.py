@@ -1,4 +1,5 @@
-"""Fixture table loaders.
+"""Fixture table loaders, and the one commit protocol of the file sinks
+(``commit``).
 
 The driver provides TPC-H-ish parquet tables (TESTDATA.md):
 region nation customer supplier part orders lineitem events documents
@@ -9,7 +10,12 @@ predicate pushdown / column pruning into the scan.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 import weakref
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -146,12 +152,84 @@ def one_row_df(spark: SparkSession, cols: list[tuple]) -> DataFrame:
     projections). The python-list ``createDataFrame([(...)])`` alternative
     is RDD-backed with defaultParallelism partitions, so EVERY action on it
     fans out one Python-worker task per core — measured ~5 s per 1-row
-    sentinel/journal parquet write on the 32-core bench box vs 0.2 s for
-    the literal build. Inside a foreachBatch journal that tax repeats per
-    micro-batch, so it dominated the streaming capstones' wall clock.
+    sentinel parquet write on the 32-core bench box vs 0.2 s for the
+    literal build. Inside a per-micro-batch sink that tax repeats every
+    batch, so it dominated the streaming capstones' wall clock.
 
     ``cols``: list of ``(name, spark_ddl_type, python_value)``.
     """
     return spark.range(1).select(
         *[F.lit(v).cast(t).alias(n) for n, t, v in cols]
     )
+
+
+# One commit protocol for every file sink (Flink VLDB'17: output and
+# progress commit as one atomic step). A sink writes its new version to a
+# hidden sibling dir, drops an empty ``_batch_<id>`` marker into it, and
+# renames it over the live dir. The marker lives and dies with the data it
+# describes, so no crash can leave a batch's rows applied but unrecorded,
+# or recorded but unapplied. Spark and pyarrow skip names that start with
+# ``_`` or ``.``, so readers see neither the marker nor a staging dir.
+_MARKER = "_batch_"
+
+
+def last_batch(path: str) -> int:
+    """Id of the micro-batch whose marker sits in ``path``'s live version,
+    -1 if none — one ``listdir``, no Spark job. Spark's batch ids only grow
+    within a query, so a batch id ≤ this one is a replay to skip."""
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return -1
+    return max(
+        (int(n[len(_MARKER):]) for n in names if n.startswith(_MARKER)), default=-1
+    )
+
+
+def swap(new: Path, target: Path) -> None:
+    """Rename ``new`` over ``target``: the live version moves aside, the
+    new one renames in, and the old one is deleted only after that. If a
+    rename fails, the old version is put back, so the live path never
+    loses its data on the error path this swap exists for. Between the two
+    renames (a single-filesystem rename is atomic) ``target`` is absent
+    for a moment; a true zero-window swap needs a metastore pointer."""
+    old = target.with_name(f".{target.name}.__old_{uuid.uuid4().hex}")
+    moved = False
+    try:
+        if target.exists():
+            target.rename(old)
+            moved = True
+        new.rename(target)
+    except BaseException:
+        if moved and not target.exists():
+            old.rename(target)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
+
+
+@contextmanager
+def staging(target: Path) -> Iterator[Path]:
+    """A fresh hidden sibling path of ``target`` to write a new version
+    into, removed on every path out (a swapped-in version has left it)."""
+    tmp = target.with_name(f".{target.name}.__tmp_{uuid.uuid4().hex}")
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def commit(
+    target: str, write: Callable[[str], object], batch_id: int | None = None
+) -> None:
+    """Replace the dir ``target`` with what ``write(path)`` writes at a
+    staging path, marked with ``batch_id`` when one is given (see
+    ``last_batch``). Nothing live changes until the staging dir is complete
+    and marked. A sink with several outputs commits the others inside its
+    ``write`` and the marker-carrying one last, so each earlier output is a
+    deterministic replace that a replay rewrites identically."""
+    target = Path(target)
+    with staging(target) as tmp:
+        write(str(tmp))
+        if batch_id is not None:
+            (tmp / f"{_MARKER}{batch_id}").touch()
+        swap(tmp, target)

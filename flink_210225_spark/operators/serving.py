@@ -2643,9 +2643,9 @@ def theil_index(tables: dict[str, DataFrame]) -> DataFrame:
     tot = rev.agg(
         F.count("*").cast("long").alias("n"), F.sum("x").cast("long").alias("t")
     ).collect()[0]
-    n_all_i, t_all_i = int(tot["n"]), int(tot["t"])
-    n_all = F.lit(n_all_i).cast("long")
-    t_all = F.lit(t_all_i).cast("long")
+    # no orders: t is NULL and so is every ratio, as in the oracle
+    n_all = F.lit(tot["n"]).cast("long")
+    t_all = F.lit(tot["t"]).cast("long")
     # per-customer term of N·T: (x/μ)·ln(x/μ) summed — spelled over exact
     # integer ratios: ln(x·N/T) with N, T now literal BIGINTs (identical
     # doubles after the cast: counts/cents sit far below 2^53)

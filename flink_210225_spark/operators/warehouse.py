@@ -670,7 +670,8 @@ def ivm_incremental_agg(tables: dict[str, DataFrame]) -> DataFrame:
     Plan: one scan builds the base view (groupBy partial agg), one scan
     builds the deltas; the merge joins two GROUP-sized frames — at
     100 TB the base facts are never re-read, which is the entire point
-    vs the O(table) rename-swap sinks (``router.upsert_dim``)."""
+    vs the sinks that commit a whole new O(table) version per batch
+    (``io.commit``, e.g. ``router.upsert_dim``)."""
     o = tables["orders"]
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     month = F.date_format("o_orderdate", "yyyy-MM").alias("month")

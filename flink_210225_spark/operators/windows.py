@@ -3550,7 +3550,8 @@ def ljung_box(tables: dict[str, DataFrame], max_lag: int = 7) -> DataFrame:
     c0 = c["c0"]
     for k in range(1, max_lag + 1):
         ck = c[f"c{k}"]
-        rho = None if c0 is None or ck is None else ck / c0
+        # a constant series has c0 == 0: rho is NULL, as 0/0 is in SQL
+        rho = None if not c0 or ck is None else ck / c0
         if rho is not None:
             q_terms.append(rho * rho / (float(n_days) - k))
         rows.append((k, n_days, micro(rho)))

@@ -2327,6 +2327,14 @@ def purged_walkforward(
         F.min(F.to_date("ts")).alias("lo"), F.max(F.to_date("ts")).alias("hi")
     ).collect()[0]
     lo, hi = b["lo"], b["hi"]
+    schema = (
+        "fold long, n_train long, n_test long, train_max_off long,"
+        " test_min_off long, leak_ok boolean"
+    )
+    if lo is None:  # no events: every fold is empty, as in the oracle
+        return ev.sparkSession.createDataFrame(
+            [(f, 0, 0, None, None, None) for f in range(1, n_folds + 1)], schema
+        )
     span = F.lit((hi - lo).days + 1)
     off = F.datediff(F.to_date("ts"), F.lit(lo)).cast("long")
     # fold band of a day offset: ceil((off+1) * n / span) in 1..n
@@ -2372,11 +2380,7 @@ def purged_walkforward(
         rows.append(
             (f, wrow[f"train_{f}"], wrow[f"test_{f}"], trmax, tl, leak_ok)
         )
-    return ev.sparkSession.createDataFrame(
-        rows,
-        "fold long, n_train long, n_test long, train_max_off long,"
-        " test_min_off long, leak_ok boolean",
-    )
+    return ev.sparkSession.createDataFrame(rows, schema)
 
 
 QUERIES["sample_purged_walkforward"] = purged_walkforward

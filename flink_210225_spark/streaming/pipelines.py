@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from flink_210225_spark.io import one_row_df
+from flink_210225_spark.io import commit, last_batch, one_row_df
 from flink_210225_spark.operators import router as router_ops
 
 
@@ -388,8 +388,9 @@ def near_dedup_batch(
     document unless its MinHash estimated Jaccard against (a) any previously
     admitted signature or (b) a smaller-doc_id document in the same batch
     reaches ``threshold``. Admitted signatures append to the store at
-    ``store_dir/sigs``; the batch-id journal makes replays no-ops (same
-    pattern as ``merge_stats_batch``).
+    ``store_dir/sigs`` as one ``batch_id=<id>`` partition, committed by
+    rename with the batch's marker inside (``io.commit``), so a replayed
+    batch is a no-op.
 
     Scale posture: the store holds one ``num_hashes``-long signature per
     admitted doc — signature-sized, not text-sized — and candidate
@@ -403,13 +404,9 @@ def near_dedup_batch(
     )
 
     spark = batch.sparkSession
-    jdir = os.path.join(store_dir, "_applied")
     sdir = os.path.join(store_dir, "sigs")
-    try:
-        applied = {r.batch_id for r in spark.read.parquet(jdir).collect()}
-    except Exception:
-        applied = set()
-    if batch_id in applied:
+    out = os.path.join(sdir, f"batch_id={batch_id}")
+    if batch_id <= last_batch(out):
         return False
 
     sig = minhash_signatures(batch.select("doc_id", "text"), num_hashes)
@@ -449,10 +446,7 @@ def near_dedup_batch(
     except Exception:  # first batch: empty store
         pass
     admitted = sig.join(dropped, "doc_id", "left_anti")
-    admitted.write.mode("append").parquet(sdir)
-    one_row_df(spark, [("batch_id", "long", int(batch_id))]).write.mode(
-        "append"
-    ).parquet(jdir)
+    commit(out, admitted.write.parquet, batch_id)
     return True
 
 
@@ -518,9 +512,12 @@ def merge_cell_counts_batch(
     """Fold one micro-batch of IVF cell assignments into the running
     observed-cell histogram at ``monitor_dir/counts`` and append a drift
     report row to ``monitor_dir/drift``. Returns False on a replayed
-    batch_id (same journal-parquet exactly-once upgrade as
-    ``merge_stats_batch``). Factored out of the stream so drift math and
-    replay semantics are testable without a restart.
+    batch_id. Both outputs go through ``io.commit``: the drift row lands
+    as its own ``batch_id=<id>`` partition first, then the counts version
+    carrying the batch marker swaps in, so a replay after a crash between
+    the two recomputes the identical drift row from the unchanged counts.
+    Factored out of the stream so drift math and replay semantics are
+    testable without a restart.
 
     ``train_sizes`` is {cell: count} from the offline build (small — one
     entry per coarse cell, broadcast as a literal DataFrame). Drift =
@@ -529,23 +526,15 @@ def merge_cell_counts_batch(
     ``retrain`` fires when TVD exceeds the threshold stored alongside. The
     merge touches only cell-count-sized tables — nothing data-sized."""
     spark = batch.sparkSession
-    jdir = os.path.join(monitor_dir, "_applied")
-    try:
-        applied = {r.batch_id for r in spark.read.parquet(jdir).collect()}
-    except Exception:
-        applied = set()
-    if batch_id in applied:
+    counts_dir = os.path.join(monitor_dir, "counts")
+    if batch_id <= last_batch(counts_dir):
         return False
     part = batch.groupBy("cell").agg(F.count("*").alias("ct"))
-    counts_dir = os.path.join(monitor_dir, "counts")
     try:
         merged = spark.read.parquet(counts_dir).unionByName(part)
     except Exception:
         merged = part
     obs = merged.groupBy("cell").agg(F.sum("ct").cast("long").alias("ct"))
-    obs.cache()
-    obs.count()
-    obs.write.mode("overwrite").parquet(counts_dir)
 
     # JVM-side construction (array literals + range unroll): this runs once
     # PER MICRO-BATCH, where a python-list createDataFrame costs a full
@@ -569,35 +558,33 @@ def merge_cell_counts_batch(
             F.lit(0).cast("int").alias("cell"),
             F.lit(0).cast("long").alias("train_ct"),
         )
-    joined = train.join(obs, "cell", "full").select(
-        "cell",
-        F.coalesce("train_ct", F.lit(0)).alias("train_ct"),
-        F.coalesce("ct", F.lit(0)).alias("obs_ct"),
-    )
-    # one global-frame window (the joined table is cell-count sized), then
-    # the agg — a window function can't sit inside an aggregate directly
-    w = Window.partitionBy()
-    shares = joined.select(
-        (F.col("train_ct") / F.sum("train_ct").over(w)).alias("p"),
-        (F.col("obs_ct") / F.sum("obs_ct").over(w)).alias("q"),
-        F.count("*").over(w).alias("n_cells"),
-    )
-    row = shares.agg(
-        (F.sum(F.abs(F.col("p") - F.col("q"))) / 2).alias("tvd"),
-        F.max(F.col("q") * F.col("n_cells")).alias("max_load_ratio"),
-    ).collect()[0]
-    obs.unpersist()
-    one_row_df(
-        spark,
-        [
-            ("batch_id", "long", int(batch_id)),
-            ("tvd", "double", float(row["tvd"])),
-            ("max_load_ratio", "double", float(row["max_load_ratio"])),
-        ],
-    ).write.mode("append").parquet(os.path.join(monitor_dir, "drift"))
-    one_row_df(spark, [("batch_id", "long", int(batch_id))]).write.mode(
-        "append"
-    ).parquet(jdir)
+
+    def write_counts(path: str) -> None:
+        obs.write.parquet(path)
+        # the drift row reads the just-written (cell-count sized) version
+        joined = train.join(spark.read.parquet(path), "cell", "full").select(
+            "cell",
+            F.coalesce("train_ct", F.lit(0)).alias("train_ct"),
+            F.coalesce("ct", F.lit(0)).alias("obs_ct"),
+        )
+        # one global-frame window (the joined table is cell-count sized),
+        # then the agg — a window function can't sit inside an aggregate
+        w = Window.partitionBy()
+        shares = joined.select(
+            (F.col("train_ct") / F.sum("train_ct").over(w)).alias("p"),
+            (F.col("obs_ct") / F.sum("obs_ct").over(w)).alias("q"),
+            F.count("*").over(w).alias("n_cells"),
+        )
+        drift = shares.agg(
+            (F.sum(F.abs(F.col("p") - F.col("q"))) / 2).alias("tvd"),
+            F.max(F.col("q") * F.col("n_cells")).cast("double").alias("max_load_ratio"),
+        )
+        commit(
+            os.path.join(monitor_dir, "drift", f"batch_id={batch_id}"),
+            drift.write.parquet,
+        )
+
+    commit(counts_dir, write_counts, batch_id)
     return True
 
 
@@ -621,7 +608,8 @@ def run_ivf_drift_monitor_stream(
     Scale posture: state is one row per coarse cell (√N cells for N
     vectors — KB-sized at 100 TB), partials map-side combine inside each
     batch, and the embedding vectors themselves never shuffle or persist
-    here. Exactly-once via the batch-id journal."""
+    here. Exactly-once via the batch marker ``merge_cell_counts_batch``
+    commits with the counts."""
     assigned = embedding_assign_stream(emb_stream, cent).select("cell")
 
     def process(batch: DataFrame, batch_id: int) -> None:
@@ -638,38 +626,28 @@ def run_ivf_drift_monitor_stream(
 def merge_stats_batch(batch: DataFrame, batch_id: int, stats_dir: str) -> bool:
     """Fold one micro-batch's partial (day, event_type) aggregates into the
     compact stats table at ``stats_dir/table``. Returns False if this
-    batch_id was already applied (replay) — the `_applied` journal parquet
-    next to the table is what upgrades foreachBatch's at-least-once into
-    exactly-once merges. Factored out of the stream so replay semantics are
-    testable without a restart."""
-    spark = batch.sparkSession
-    jdir = os.path.join(stats_dir, "_applied")
-    try:
-        applied = {r.batch_id for r in spark.read.parquet(jdir).collect()}
-    except Exception:
-        applied = set()
-    if batch_id in applied:
+    batch_id was already applied (replay). The merged version is written
+    beside the live table with the batch marker inside and renamed in
+    (``io.commit``); that marker is what upgrades foreachBatch's
+    at-least-once into exactly-once merges, and because it commits with
+    the data, a crash at any step either applied the batch or left the old
+    table. Factored out of the stream so replay semantics are testable
+    without a restart."""
+    data_dir = os.path.join(stats_dir, "table")
+    if batch_id <= last_batch(data_dir):
         return False
     part = batch.groupBy(
         F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"
     ).agg(F.count("*").alias("pv_ct"), F.sum("value").alias("value_sum"))
-    data_dir = os.path.join(stats_dir, "table")
     try:
-        merged = spark.read.parquet(data_dir).unionByName(part)
+        merged = batch.sparkSession.read.parquet(data_dir).unionByName(part)
     except Exception:  # first batch: table auto-created
         merged = part
     out = merged.groupBy("day", "event_type").agg(
         F.sum("pv_ct").cast("long").alias("pv_ct"),
         F.sum("value_sum").alias("value_sum"),
     )
-    # Materialize before overwrite: the plan reads the path it writes.
-    out.cache()
-    out.count()
-    out.write.mode("overwrite").parquet(data_dir)
-    out.unpersist()
-    one_row_df(spark, [("batch_id", "long", int(batch_id))]).write.mode(
-        "append"
-    ).parquet(jdir)
+    commit(data_dir, out.write.parquet, batch_id)
     return True
 
 
@@ -683,9 +661,10 @@ def run_stats_maintenance_stream(events: DataFrame, stats_dir: str, checkpoint_d
     Scale posture: partials are map-side combined (per-batch shuffle is
     group-count rows, not event rows) and the merge rewrites only the
     AGGREGATE table — serving-sized (days × event types), not data-sized;
-    with Delta the read-union-overwrite becomes MERGE INTO. Exactly-once:
-    foreachBatch is at-least-once on restart, the batch-id journal makes
-    the merge idempotent (``merge_stats_batch``)."""
+    with Delta the read-union-swap becomes MERGE INTO. Exactly-once:
+    foreachBatch is at-least-once on restart, and the batch marker that
+    commits with each table version makes the merge idempotent
+    (``merge_stats_batch``)."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
         merge_stats_batch(batch, batch_id, stats_dir)
@@ -764,39 +743,29 @@ def merge_scd2_batch(
     into a persistent SCD TYPE-2 dim history at ``dim_dir/table`` — the
     streaming sibling of ``operators/router.py scd2_history`` and the
     history-keeping upgrade of ``upsert_dim`` (which keeps only latest).
-    The stored table keeps raw change rows' payloads alongside the derived
-    interval columns; each merge re-derives intervals ONLY for keys touched
-    by the batch (a semi-join bounds the rewrite set), unions the untouched
-    history back, and overwrites — with Delta this becomes MERGE INTO
-    partitioned by key-bucket so untouched buckets aren't rewritten.
-    Exactly-once via the same batch-id journal as ``merge_stats_batch``,
-    PLUS store-level idempotence (ADVICE r1): every stored change row is
-    tagged with the batch_id that delivered it, and a merge first drops any
-    stored rows bearing the incoming batch_id — so a crash after the store
-    overwrite but before the journal append cannot double-apply the batch
-    on retry (the journal alone can't promise that). The store swap itself
-    is write-to-temp + rename, so a crash mid-write leaves the old store.
+    The raw change rows persist at ``dim_dir/changes``; each merge writes
+    the new change set, re-derives the history from it, and swaps both in
+    with ``io.commit`` — with Delta this becomes MERGE INTO partitioned by
+    key-bucket so untouched buckets aren't rewritten.
+    Exactly-once: ``table`` swaps first, as a deterministic replace a
+    replay rewrites identically, then ``changes`` swaps with the batch
+    marker inside, so the marker commits with the rows it records. Every
+    stored change row also carries the batch_id that delivered it, and a
+    merge first drops stored rows bearing the incoming batch_id — should
+    the marker ever be lost with the rows kept, the retried batch still
+    cannot double its rows.
     Deletes arrive as rows with type='delete' and close intervals per
     scd2_history semantics; the raw delete rows persist in the store (they
     keep closing intervals on every re-derive)."""
-    import shutil
-    import uuid
-    from pathlib import Path
-
     from flink_210225_spark.operators.router import scd2_history
 
     spark = changes.sparkSession
-    jdir = os.path.join(dim_dir, "_applied")
-    try:
-        applied = {r.batch_id for r in spark.read.parquet(jdir).collect()}
-    except Exception:
-        applied = set()
-    if batch_id in applied:
+    raw_dir = os.path.join(dim_dir, "changes")
+    if batch_id <= last_batch(raw_dir):
         return False
-    raw_dir = Path(dim_dir) / "changes"
     tagged = changes.withColumn("__batch_id", F.lit(int(batch_id)))
     try:
-        existing = spark.read.parquet(str(raw_dir))
+        existing = spark.read.parquet(raw_dir)
         if "__batch_id" not in existing.columns:  # pre-tagging store
             existing = existing.withColumn(
                 "__batch_id", F.lit(None).cast("long")
@@ -807,40 +776,20 @@ def merge_scd2_batch(
         all_changes = existing.unionByName(tagged)
     except Exception:
         all_changes = tagged
-    tmp = raw_dir.with_name(f"changes.__tmp_{uuid.uuid4().hex}")
-    old = raw_dir.with_name(f"changes.__old_{uuid.uuid4().hex}")
-    # Backup/staging removed only AFTER a successful swap; a failed second
-    # rename restores the backup (see operators/router.upsert_dim — an
-    # unconditional finally would delete both surviving copies).
-    try:
-        all_changes.write.parquet(str(tmp))
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    moved = False
-    try:
-        if raw_dir.exists():
-            raw_dir.rename(old)
-            moved = True
-        tmp.rename(raw_dir)
-    except BaseException:
-        if moved and not raw_dir.exists():
-            old.rename(raw_dir)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    hist = scd2_history(spark.read.parquet(str(raw_dir)).drop("__batch_id"), [key], "ts")
-    hist.write.mode("overwrite").parquet(os.path.join(dim_dir, "table"))
-    one_row_df(spark, [("batch_id", "long", int(batch_id))]).write.mode(
-        "append"
-    ).parquet(jdir)
+
+    def write_changes(path: str) -> None:
+        all_changes.write.parquet(path)
+        hist = scd2_history(spark.read.parquet(path).drop("__batch_id"), [key], "ts")
+        commit(os.path.join(dim_dir, "table"), hist.write.parquet)
+
+    commit(raw_dir, write_changes, batch_id)
     return True
 
 
 def run_scd2_stream(changes: DataFrame, dim_dir: str, checkpoint_dir: str, key: str = "key"):
-    """SCD2 dim maintenance as a stream: foreachBatch + batch-id journal =
-    exactly-once history merges (K4/K5's type-2 upgrade)."""
+    """SCD2 dim maintenance as a stream: foreachBatch + the batch marker
+    committed with each change-set version = exactly-once history merges
+    (K4/K5's type-2 upgrade)."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
         merge_scd2_batch(batch, batch_id, dim_dir, key)
@@ -1285,7 +1234,7 @@ def upsert_stream_materialized(tables: dict[str, DataFrame]) -> DataFrame:
     ``foreachBatch`` → ``upsert_dim_bucketed(order_col='ts')``, then the
     maintained dim is read back. Event-time last-write-wins makes the final
     table independent of micro-batch arrival order AND of replays, so no
-    batch journal is needed and the DuckDB oracle is simply the
+    batch marker is needed and the DuckDB oracle is simply the
     latest-change-per-key window over the same synthesized changes. The
     sink only ever rewrites the bucket partitions each batch touches — the
     cost-proportional-to-touched-keys contract, here under the driver

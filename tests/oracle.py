@@ -54,3 +54,23 @@ def assert_matches_oracle(spark_df, sql: str, sf_dir: str) -> None:
     g, o = canonical_rows(got), canonical_rows(oracle)
     mism = [(a, b) for a, b in zip(g, o) if a != b][:5]
     assert g == o, f"value mismatch; first diffs: {mism}"
+
+
+def degenerate_fixture(out_dir, src_dir: str, **tables) -> str:
+    """A fixture dir holding ``src_dir``'s tables, with each table named in
+    ``tables`` replaced by the given pyarrow table (empty, one-row or
+    constant inputs), for checking an operator against its oracle on
+    degenerate data."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out_dir = str(out_dir)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in os.listdir(src_dir):
+        table = name.removesuffix(".parquet")
+        if table in tables:
+            pq.write_table(tables[table], os.path.join(out_dir, name))
+        else:
+            os.symlink(os.path.join(src_dir, name), os.path.join(out_dir, name))
+    return out_dir

@@ -291,3 +291,21 @@ def test_reservoir_weighted_matches_python_model(tables):
     sampled_mean = sum(weights[r.doc_id] for r in got_rows) / len(got_rows)
     corpus_mean = sum(weights.values()) / len(weights)
     assert sampled_mean > corpus_mean
+
+
+def test_purged_walkforward_empty_events(spark, tmp_path):
+    """No events: every fold is empty with NULL bounds, as in the oracle,
+    not a date subtraction of None bounds."""
+    import pyarrow.parquet as pq
+
+    from flink_210225_spark.io import load_tables
+
+    from .oracle import degenerate_fixture
+
+    empty = pq.read_table(f"{SF_DIR}/events.parquet").slice(0, 0)
+    d = degenerate_fixture(tmp_path / "empty", SF_DIR, events=empty)
+    assert_matches_oracle(
+        sampling.purged_walkforward(load_tables(spark, d)),
+        sampling.ORACLES["sample_purged_walkforward"],
+        d,
+    )

@@ -77,3 +77,19 @@ def test_compaction_plan_invariants(tables):
         if r.needs_compaction:
             assert r.target_files + r.files_saved == r.n_files
         assert r.avg_file_bytes * r.n_files <= r.total_bytes
+
+
+def test_theil_index_empty_orders_is_null(spark, tmp_path):
+    """No orders: one row with zero counts and NULL indexes, as in the
+    oracle, not int(None)."""
+    import pyarrow.parquet as pq
+
+    from flink_210225_spark.io import load_tables
+
+    from .oracle import degenerate_fixture
+
+    empty = pq.read_table(f"{SF_DIR}/orders.parquet").slice(0, 0)
+    d = degenerate_fixture(tmp_path / "empty", SF_DIR, orders=empty)
+    assert_matches_oracle(
+        serving.theil_index(load_tables(spark, d)), serving.ORACLES["serving_theil_index"], d
+    )

@@ -432,12 +432,12 @@ def test_scd2_stream_matches_batch_history(spark, tmp_path):
 
 
 def test_scd2_merge_idempotent_after_lost_journal(spark, tmp_path):
-    """ADVICE r1: a crash after the change-store overwrite but before the
-    journal append re-delivers the batch with its rows already stored. The
-    per-row batch_id tag must make the retried merge a no-op instead of
-    doubling (key, ts) change rows into nondeterministic SCD2 versions."""
-    import shutil
-
+    """ADVICE r1: a batch re-delivered with its rows already stored but its
+    progress record lost. The batch marker commits inside the change-set
+    version, so losing it while the rows stay is simulated by deleting
+    the marker. The per-row batch_id tag must make the retried merge a
+    no-op instead of doubling (key, ts) change rows into nondeterministic
+    SCD2 versions."""
     from flink_210225_spark.streaming.pipelines import merge_scd2_batch
 
     dim = tmp_path / "dim"
@@ -454,8 +454,8 @@ def test_scd2_merge_idempotent_after_lost_journal(spark, tmp_path):
         (r.key, r.version): (r.val, r.is_current)
         for r in spark.read.parquet(str(dim / "table")).collect()
     }
-    # simulate the crash window: journal row for batch 1 lost, store kept
-    shutil.rmtree(dim / "_applied")
+    # simulate the lost-progress window: batch 1's marker gone, rows kept
+    (dim / "changes" / "_batch_1").unlink()
     merge_scd2_batch(b0, 0, str(dim))  # both batches re-delivered
     assert merge_scd2_batch(b1, 1, str(dim))
     got = {

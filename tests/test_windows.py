@@ -220,3 +220,25 @@ def test_cusum_flags_level_shift(spark):
         assert r.cusum_pos == s, (r.day, r.cusum_pos, s)
     assert not any(r.shift_up for r in out[:5])
     assert all(r.shift_up for r in out[6:])
+
+
+def test_ljung_box_constant_series_is_null(spark, tmp_path):
+    """Equal daily sums make c0 == 0: every ρ̂ and Q are NULL, as in the
+    oracle, not a ZeroDivisionError."""
+    from datetime import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_210225_spark.io import load_tables
+
+    from .oracle import degenerate_fixture
+
+    ev = pq.read_table(f"{SF_DIR}/events.parquet").slice(0, 3)
+    days = pa.array([datetime(2021, 2, d, 12) for d in (1, 2, 3)], ev.schema.field("ts").type)
+    ev = ev.set_column(ev.schema.get_field_index("ts"), "ts", days)
+    ev = ev.set_column(ev.schema.get_field_index("value"), "value", pa.array([5.0] * 3))
+    d = degenerate_fixture(tmp_path / "constant", SF_DIR, events=ev)
+    assert_matches_oracle(
+        windows.ljung_box(load_tables(spark, d)), windows.ORACLES["window_ljung_box"], d
+    )
