@@ -5,16 +5,56 @@ UNIX_TIMESTAMP (F4), toYYYYMMDD/toHour (F5/F6), if()/multiIf (F7/F8), map
 subscript (F9), split/substring (F10), date math (F11), age derivation (F12),
 guarded ratios (F13). All are thin compositions of built-in functions so they
 stay inside whole-stage codegen — no Python UDFs here.
+
+``per_jvm`` memoises the Column expressions an operator builds, so an
+operator called again and again in one JVM builds them once.
 """
 
 from __future__ import annotations
 
+import functools
+import weakref
+
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # yyyy-MM-dd HH:mm:ss — the reference's canonical datetime string format
 # (utils/DateTimeUtil.java:15-25).
 YMD_HMS = "yyyy-MM-dd HH:mm:ss"
+
+# live py4j gateway -> {(builder, args, arg types): built expressions}
+_PER_JVM: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def per_jvm(build):
+    """Memoise ``build(*args)`` — a function of hashable arguments (names,
+    ints, floats, tuples) that returns Column expressions — per live JVM.
+
+    Every ``F.*`` call and Column operator is a py4j round trip (~70 µs),
+    and an operator with array lambdas makes thousands of them per call
+    before Spark runs anything. The memo key holds the py4j gateway
+    (``SparkContext._gateway``) weakly, so a restarted JVM builds afresh
+    and never meets another JVM's JavaObjects. Only expressions are
+    cached: a Column is an unresolved expression tree, so every call still
+    builds, analyses and runs a fresh plan over its own input. Argument
+    types are part of the key, so ``1`` and ``1.0`` (equal and equally
+    hashed, but different literals) do not share an entry. Two threads
+    making a first call may both build; either result is valid, so there
+    is no lock."""
+
+    @functools.wraps(build)
+    def cached(*args):
+        gateway = SparkContext._gateway
+        if gateway is None:
+            return build(*args)
+        memo = _PER_JVM.setdefault(gateway, {})
+        key = (build, args, tuple(type(a) for a in args))
+        if key not in memo:
+            memo[key] = build(*args)
+        return memo[key]
+
+    return cached
 
 
 def round2(col: Column) -> Column:

@@ -13,6 +13,9 @@ Scale design (the whole point of these ops at 100 TB):
   b bands of r rows; docs agreeing on a band's sub-signature share a bucket
   and pair up in place (groupBy band+bucket, collect, ordered pairs — no
   self-join, one scan). Shuffle cost O(docs × b) — the linear-ish scale path.
+  Candidates and their exact verification both read one per-doc sketch
+  (signature + shingle-hash set, ``minhash_sketch``), and their Column
+  expressions are built once per JVM (``scalars.per_jvm``).
 - **simhash**: 64-bit signature via per-bit majority vote over token hashes,
   computed as 64 conditional sums in ONE aggregation pass (no UDF, no
   explode-per-bit). Near-dups = small hamming distance, blocked on 16-bit
@@ -26,7 +29,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from flink_210225_spark.functions.scalars import round6
+from flink_210225_spark.functions.scalars import per_jvm, round6
 from flink_210225_spark.ops.text import tokens_col
 
 # --- exact dedup ---
@@ -880,17 +883,63 @@ def ngram_novelty(tables: dict[str, DataFrame], n: int = 3) -> DataFrame:
 # --- MinHash + LSH ---
 
 
+@per_jvm
+def _sketch_exprs(num_hashes: int, n: int) -> tuple[Column, tuple[Column, ...]]:
+    """The shingle explode and the two per-doc aggregates of
+    ``minhash_sketch``: k xxhash64 minhashes (family index baked into the
+    hash input) and the set of xxhash64 shingle hashes."""
+    shingle = F.col("shingle")
+    return F.explode(shingles_col(F.col("text"), n)).alias("shingle"), (
+        F.array(
+            *[F.min(F.xxhash64(shingle, F.lit(i))) for i in range(num_hashes)]
+        ).alias("minhash"),
+        F.collect_set(F.xxhash64(shingle)).alias("s"),
+    )
+
+
+def minhash_sketch(docs: DataFrame, num_hashes: int = 16, n: int = 3) -> DataFrame:
+    """(doc_id, minhash, s): each doc's k minhash values and its set of
+    distinct shingle hashes, from ONE shingle explode and ONE
+    ``groupBy(doc_id)``, all JVM-side. The docs are spread by doc_id
+    (``_spread_by_doc``), so the aggregation reuses that partitioning and
+    needs no second exchange. A consumer that selects only ``minhash``
+    gets a plan without the hash-set aggregate (column pruning drops it)."""
+    explode, aggs = _sketch_exprs(num_hashes, n)
+    return _spread_by_doc(docs).select("doc_id", explode).groupBy("doc_id").agg(*aggs)
+
+
 def minhash_signatures(docs: DataFrame, num_hashes: int = 16, n: int = 3) -> DataFrame:
-    """doc_id + array of k minhash values. k independent hash families come
-    from xxhash64 with the family index baked into the input — all JVM-side."""
-    sh = doc_shingles(docs, n)
-    aggs = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    return sig.select(
-        "doc_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("minhash")
+    """doc_id + array of k minhash values: ``minhash_sketch`` without the
+    hash set. The streaming near-dedup store indexes these signatures, so
+    batch and stream share one minhash definition."""
+    return minhash_sketch(docs, num_hashes, n).select("doc_id", "minhash")
+
+
+@per_jvm
+def _band_expr(num_hashes: int, bands: int) -> Column:
+    """One (band, bucket) struct per band, exploded: bucket = xxhash64 of
+    the band's sub-signature."""
+    r = num_hashes // bands
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(bi).alias("band"),
+                    F.xxhash64(
+                        F.concat_ws(",", *[F.slice("minhash", bi * r + 1, r)])
+                    ).alias("bucket"),
+                )
+                for bi in range(bands)
+            ]
+        )
+    ).alias("bb")
+
+
+def _banded(sig: DataFrame, num_hashes: int, bands: int, *carry: str) -> DataFrame:
+    """(``carry``..., band, bucket) rows of a frame with a ``minhash``
+    column, one per band."""
+    return sig.select(*carry, _band_expr(num_hashes, bands)).select(
+        *carry, "bb.band", "bb.bucket"
     )
 
 
@@ -898,30 +947,61 @@ def banded_buckets(sig: DataFrame, num_hashes: int = 16, bands: int = 4) -> Data
     """(doc_id, minhash, band, bucket): bucket = xxhash64 of the band's
     sub-signature. Shared by the batch candidate generator and the
     streaming signature store so both index signatures identically."""
-    r = num_hashes // bands
-    return sig.select(
-        "doc_id",
-        "minhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(",", *[F.slice("minhash", bi * r + 1, r)])
-                        ).alias("bucket"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "minhash", "bb.band", "bb.bucket")
+    return _banded(sig, num_hashes, bands, "doc_id", "minhash")
 
 
 def est_jaccard_col(a, b, num_hashes: int = 16):
     """Signature agreement rate — the MinHash Jaccard estimator."""
     return F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda e: e)) / F.lit(
         num_hashes
+    )
+
+
+@per_jvm
+def _pair_exprs(payload: str) -> tuple[Column, Column, Column]:
+    """Bucket aggregate, its "has a pair" filter, and the exploded ordered
+    pairs ``p`` = struct(a, b) with a.doc_id < b.doc_id, each side a
+    struct of doc_id and ``payload``."""
+    ms = F.collect_list(F.struct("doc_id", payload)).alias("ms")
+    pairs = F.explode(
+        F.filter(
+            F.flatten(
+                F.transform(
+                    "ms",
+                    lambda x: F.transform("ms", lambda y: F.struct(x.alias("a"), y.alias("b"))),
+                )
+            ),
+            lambda p: p["a"]["doc_id"] < p["b"]["doc_id"],
+        )
+    ).alias("p")
+    return ms, F.size("ms") > 1, pairs
+
+
+def _bucket_pairs(
+    sketch: DataFrame, num_hashes: int, bands: int, payload: str
+) -> DataFrame:
+    """One ``p`` row per (band, bucket) a doc pair shares — in-bucket pair
+    generation instead of a bucket self-join: group by (band, bucket),
+    collect the (doc_id, payload) structs, emit ordered pairs with array
+    lambdas. The sketch is planned once (a self-join plans it twice —
+    lambda subtrees defeat ReuseExchange) and there is exactly one
+    shuffle, keyed by (band, bucket). A bucket's rows land in one task
+    either way (equi-join does the same), so the skew profile is
+    unchanged; bucket size stays small by LSH construction (bits ≈ log2
+    corpus), which is also what bounds collect_list memory. A pair that
+    shares several bands appears once per band."""
+    ms, has_pair, pairs = _pair_exprs(payload)
+    banded = _banded(sketch, num_hashes, bands, "doc_id", payload)
+    return banded.groupBy("band", "bucket").agg(ms).filter(has_pair).select(pairs)
+
+
+@per_jvm
+def _candidate_cols(num_hashes: int) -> tuple[Column, ...]:
+    est = est_jaccard_col(F.col("p.a.minhash"), F.col("p.b.minhash"), num_hashes)
+    return (
+        F.col("p.a.doc_id").alias("doc_a"),
+        F.col("p.b.doc_id").alias("doc_b"),
+        (F.floor(est * 10000 + 0.5) / 10000).alias("est_jaccard"),
     )
 
 
@@ -933,50 +1013,13 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """LSH-banded candidate pairs with the estimated Jaccard (signature
     agreement rate). rows_per_band = num_hashes/bands; pairs collide when any
-    band's sub-signature matches exactly."""
-    docs = tables["documents"]
-    sig = minhash_signatures(docs, num_hashes, n)
-    banded = banded_buckets(sig, num_hashes, bands)
-    # In-bucket pair generation instead of a bucket self-join: group by
-    # (band, bucket), collect the (doc_id, minhash) structs, emit ordered
-    # pairs with array lambdas. The shingle→minhash→band pipeline runs ONCE
-    # (a self-join plans it twice — lambda subtrees defeat ReuseExchange) and
-    # there is exactly one shuffle, keyed by (band, bucket). A bucket's rows
-    # land in one task either way (equi-join does the same), so the skew
-    # profile is unchanged; bucket size stays small by LSH construction
-    # (bits ≈ log2 corpus), which is also what bounds collect_list memory.
-    buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(F.collect_list(F.struct("doc_id", "minhash")).alias("ms"))
-        .filter(F.size("ms") > 1)
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.filter(
-                F.flatten(
-                    F.transform(
-                        "ms",
-                        lambda x: F.transform(
-                            "ms", lambda y: F.struct(x.alias("a"), y.alias("b"))
-                        ),
-                    )
-                ),
-                lambda p: p["a"]["doc_id"] < p["b"]["doc_id"],
-            )
-        ).alias("p")
-    )
-    cand = pairs.select(
-        F.col("p.a.doc_id").alias("doc_a"),
-        F.col("p.b.doc_id").alias("doc_b"),
-        F.col("p.a.minhash").alias("mh_a"),
-        F.col("p.b.minhash").alias("mh_b"),
-    ).dropDuplicates(["doc_a", "doc_b"])
-    est = F.size(
-        F.filter(
-            F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda eq: eq
-        )
-    ) / F.lit(num_hashes)
-    return cand.select("doc_a", "doc_b", (F.floor(est * 10000 + 0.5) / 10000).alias("est_jaccard"))
+    band's sub-signature matches exactly. Bands ``minhash_signatures`` and
+    pairs up in place (``_bucket_pairs``); a pair found in several bands is
+    kept once. Expressions are built once per JVM (``per_jvm``)."""
+    sig = minhash_signatures(tables["documents"], num_hashes, n)
+    return _bucket_pairs(sig, num_hashes, bands, "minhash").select(
+        *_candidate_cols(num_hashes)
+    ).distinct()
 
 
 # Universal-hash minhash families over the Mersenne prime 2^31-1:
@@ -1353,6 +1396,20 @@ def simhash_banded_md5(
     )
 
 
+@per_jvm
+def _verified_exprs(threshold: float) -> tuple[tuple[Column, ...], Column]:
+    sa, sb = F.col("p.a.s"), F.col("p.b.s")
+    inter = F.size(F.array_intersect(sa, sb))
+    jac = inter / (F.size(sa) + F.size(sb) - inter)
+    jaccard = F.floor(jac * 10000 + 0.5) / 10000
+    cols = (
+        F.col("p.a.doc_id").alias("doc_a"),
+        F.col("p.b.doc_id").alias("doc_b"),
+        jaccard.alias("jaccard"),
+    )
+    return cols, F.col("jaccard") >= threshold
+
+
 def minhash_verified_pairs(
     tables: dict[str, DataFrame],
     num_hashes: int = 16,
@@ -1362,33 +1419,23 @@ def minhash_verified_pairs(
 ) -> DataFrame:
     """The scale-path composition the docstrings above describe: MinHash-LSH
     proposes candidate pairs (linear-ish), exact Jaccard verifies ONLY those
-    pairs. Per-doc distinct-shingle-hash sets are joined to the candidate
-    list (shuffles keyed by doc_id) and intersected with ``array_intersect``
-    — cost O(candidates × avg shingles), never O(corpus²). Emits the same
-    (doc_a, doc_b, jaccard) shape as ``ngram_jaccard_pairs`` restricted to
-    pairs LSH surfaced; recall vs the full exact verifier is the LSH
-    band/row tradeoff, gated in tests."""
-    docs = tables["documents"]
-    cand = minhash_lsh_candidates(tables, num_hashes, bands, n).select("doc_a", "doc_b")
-    # doc_shingles is already per-doc distinct, so the collected hash set's
-    # size equals the shingle count used by the full verifier.
-    sets = (
-        doc_shingles(docs, n)
-        .select("doc_id", F.xxhash64("shingle").alias("sh"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("sh").alias("s"))
-    )
-    pairs = (
-        cand.join(sets.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("sa")), "doc_a")
-        .join(sets.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("sb")), "doc_b")
-    )
-    inter = F.size(F.array_intersect("sa", "sb"))
-    jac = inter / (F.size("sa") + F.size("sb") - inter)
-    return (
-        pairs.withColumn("jaccard", F.floor(jac * 10000 + 0.5) / 10000)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    pairs — cost O(candidates × avg shingles), never O(corpus²). Emits the
+    same (doc_a, doc_b, jaccard) shape as ``ngram_jaccard_pairs`` restricted
+    to the pairs ``minhash_lsh_candidates`` surfaces; recall vs the full
+    exact verifier is the LSH band/row tradeoff, gated in tests.
+
+    One plan, one scan: ``minhash_sketch`` yields each doc's signature AND
+    its distinct-shingle-hash set from a single explode and aggregation,
+    the bucket structs carry the set, and ``array_intersect`` runs on the
+    in-bucket pairs — no second explode and no joins. The trade-off at
+    scale: the (band, bucket) shuffle carries each doc's hash set once per
+    band (``bands`` × avg shingles × 8 bytes a doc), in exchange for no
+    second shingle explode and no two doc_id joins of the sets to the
+    candidates. Pairs sharing several bands are intersected once per shared
+    band before ``distinct``."""
+    sketch = minhash_sketch(tables["documents"], num_hashes, n)
+    cols, keep = _verified_exprs(threshold)
+    return _bucket_pairs(sketch, num_hashes, bands, "s").select(*cols).filter(keep).distinct()
 
 
 def lsh_family_audit(tables: dict[str, DataFrame]) -> DataFrame:

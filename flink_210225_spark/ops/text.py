@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from pyspark import StorageLevel
 
-from flink_210225_spark.functions.scalars import round6
+from flink_210225_spark.functions.scalars import per_jvm, round6
 
 # Corpus-scale multi-consumer checkpoints go to disk, not heap (VERDICT
 # r10 #4): replication-1 local blocks either way, but DISK_ONLY keeps a
@@ -429,13 +429,25 @@ def curation_pipeline(
     exact expression its standalone query uses (single source of truth), so
     this is the per-row filter stack fused the way a 100 TB run would fuse
     it: one pass over the corpus deciding selected = repetition-clean AND
-    quality ≥ threshold, with the split carried for downstream routing."""
+    quality ≥ threshold, with the split carried for downstream routing.
+
+    The expressions are built once per JVM (``_curation_exprs``): building
+    them took about 1,400 py4j round trips and 200 ms a call on a 4-core
+    host, close to the time a 625-document pass spends running them. Each
+    call plans afresh over its own ``documents``, so the pass stays
+    stream-composable."""
+    docs = tables["documents"]
+    toks, cols = _curation_exprs(min_quality, top_frac_max, dup_bigram_max)
+    return docs.select("doc_id", "text", toks).select(*cols)
+
+
+@per_jvm
+def _curation_exprs(
+    min_quality: float, top_frac_max: float, dup_bigram_max: float
+) -> tuple[Column, tuple[Column, ...]]:
+    """``curation_pipeline``'s token column and its six output columns."""
     from flink_210225_spark.ops.sampling import _TEST, _VAL
 
-    docs = tables["documents"]
-    base = docs.select(
-        "doc_id", "lang", "text", tokens_col(F.col("text")).alias("toks")
-    )
     toks = F.col("toks")
     rep = _repetition_cols(toks, top_frac_max, dup_bigram_max)
     quality = _quality_expr(toks)
@@ -445,8 +457,8 @@ def curation_pipeline(
         .when(h1.isin(*_TEST), F.lit("test"))
         .otherwise(F.lit("train"))
     )
-    return base.select(
-        "doc_id",
+    return tokens_col(F.col("text")).alias("toks"), (
+        F.col("doc_id"),
         quality.alias("quality"),
         rep["keep"].alias("keep_repetition"),
         _pred_lang_expr(toks).alias("pred_lang"),

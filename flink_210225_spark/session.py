@@ -71,7 +71,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # parallelismFirst: Spark's docs suggest false (respect the
         # advisory partition size) — measured A/B over an 18-query
-        # cross-family subset this round (OPTIMIZATION_r10.md wave 5):
+        # cross-family subset in round 10:
         # false REGRESSED the shingle/join pipelines 40-110% at fixture
         # scale (post-shuffle stages coalesce to 1-2 tasks and lose the
         # parallelism the partial-topk/fold work needs) and won only on
@@ -84,7 +84,7 @@ def get_spark(
         )
         # preferSortMergeJoin: guide §3.1/§9 — allowing shuffled-hash join
         # when its size conditions fit skips both sort passes. A/B'd over
-        # a join-heavy subset this round (OPTIMIZATION_r10.md wave 5): one
+        # a join-heavy subset in round 10: one
         # session pair showed ~15% join-side wins, the re-run was inside
         # this host's session jitter — not adopted on local evidence.
         # Env-overridable so cluster profiles (where SHJ's win is

@@ -43,6 +43,8 @@ def test_parse_and_split(spark):
     assert dirty.columns == ["value"]  # original string preserved for dead-letter
 
     branches = logsplit.split_log_stream(parsed)
+    assert sorted(branches) == ["display", "page", "start"]
+    assert branches["page"] is branches["page"]  # built once, on first access
     assert branches["start"].count() == 1
     page_rows = branches["page"].collect()
     assert len(page_rows) == 1 and page_rows[0]["page_id"] == "good_detail"

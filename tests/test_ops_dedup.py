@@ -162,6 +162,67 @@ def test_minhash_verified_equals_exact_on_candidates(tables):
     assert len(verified) >= 0.9 * len(exact)
 
 
+def test_minhash_verified_pairs_one_scan_no_join(tables):
+    """Signatures and shingle-hash sets come from one sketch of the docs,
+    and the sets ride the bucket structs: one scan of documents, no join."""
+    plan = (
+        dedup.minhash_verified_pairs(tables)._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("Scan parquet") == 1
+    assert "Join" not in plan
+
+
+def _degenerate_documents():
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet")
+    const = docs.slice(0, 6)
+    text = const.column("text")[0].as_py()
+    const = const.set_column(
+        const.schema.get_field_index("text"), "text", pa.array([text] * 6)
+    )
+    return {"empty": docs.slice(0, 0), "one_row": docs.slice(0, 1), "constant_text": const}
+
+
+@pytest.mark.parametrize("case", ["empty", "one_row", "constant_text"])
+def test_curation_steps_on_degenerate_documents(spark, tmp_path, case):
+    """curation_pipeline, minhash_lsh_candidates and minhash_verified_pairs
+    return results, not exceptions, on empty, one-row and constant-text
+    documents, and agree with their DuckDB oracles: every byte-identical
+    pair is a candidate with estimate 1, and verification keeps exactly the
+    candidates the exact shingle Jaccard keeps, with that Jaccard."""
+    from flink_210225_spark.io import load_tables
+    from flink_210225_spark.ops import text
+
+    from .oracle import degenerate_fixture, duck_connect
+
+    docs = _degenerate_documents()[case]
+    d = degenerate_fixture(tmp_path / case, SF_DIR, documents=docs)
+    tables = load_tables(spark, d)
+    assert_matches_oracle(
+        text.curation_pipeline(tables), text.ORACLES["text_curation_pipeline"], d
+    )
+    cand = {
+        (r.doc_a, r.doc_b): r.est_jaccard
+        for r in dedup.minhash_lsh_candidates(tables).collect()
+    }
+    verified = {
+        (r.doc_a, r.doc_b): r.jaccard for r in dedup.minhash_verified_pairs(tables).collect()
+    }
+    con = duck_connect(d)
+    try:
+        exact = {(a, b): j for a, b, j in con.execute(dedup.ORACLES["dedup_ngram_jaccard"]).fetchall()}
+    finally:
+        con.close()
+    ids = sorted(docs.column("doc_id").to_pylist())
+    if case == "constant_text":
+        assert cand == {(a, b): 1.0 for a in ids for b in ids if a < b}
+    else:
+        assert cand == {}
+    assert verified == {p: j for p, j in exact.items() if p in cand}
+
+
 def test_prefix_filter_equals_quadratic(tables, dup_docs):
     """Prefix filtering is lossless pruning: identical (pair, jaccard) output
     to the quadratic baseline on fixture data and on the near-dup micro set."""

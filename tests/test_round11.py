@@ -119,6 +119,10 @@ def test_semantic_audit_single_join_shape(tables):
 
     plan = _plan(semantic_dedup_audit(tables))
     assert plan.count("Scan parquet") <= 6
+    # the shape itself, not only its scan count: one full-outer join of the
+    # two pair sets, and no union of per-branch aggregates
+    full_outer = [ln for ln in plan.splitlines() if "Join" in ln and "FullOuter" in ln]
+    assert len(full_outer) == 1
     assert "Union" not in plan
 
 

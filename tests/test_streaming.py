@@ -288,6 +288,36 @@ def test_stats_maintenance_merges_across_batches(spark, tmp_path):
     assert table() == want
 
 
+def test_stats_batch_table_keeps_its_schema(spark, tmp_path):
+    """The stats table has one schema whatever a batch brings: an empty
+    first batch and integer values still give (string, string, bigint,
+    double), and later batches merge into it."""
+    from datetime import datetime
+
+    table = str(tmp_path / "table")
+    schema = "struct<day:string,event_type:string,pv_ct:bigint,value_sum:double>"
+    empty = spark.createDataFrame([], "ts timestamp, event_type string, value int")
+    assert sp.merge_stats_batch(empty, 0, str(tmp_path))
+    assert spark.read.parquet(table).schema.simpleString() == schema
+    assert spark.read.parquet(table).count() == 0
+
+    ints = spark.createDataFrame(
+        [(datetime(2021, 2, 25, 10), "page", 2)], "ts timestamp, event_type string, value int"
+    )
+    doubles = spark.createDataFrame(
+        [(datetime(2021, 2, 25, 11), "page", 1.5), (datetime(2021, 2, 26, 9), "view", 4.0)],
+        "ts timestamp, event_type string, value double",
+    )
+    assert sp.merge_stats_batch(ints, 1, str(tmp_path))
+    assert sp.merge_stats_batch(doubles, 2, str(tmp_path))
+    got = spark.read.parquet(table)
+    assert got.schema.simpleString() == schema
+    assert sorted(map(tuple, got.collect())) == [
+        ("2021-02-25", "page", 2, 3.5),
+        ("2021-02-26", "view", 1, 4.0),
+    ]
+
+
 def test_router_stream_end_to_end(spark, tmp_path):
     from flink_210225_spark.schemas import CDC_ENVELOPE_SCHEMA
 
